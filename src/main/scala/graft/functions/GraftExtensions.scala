@@ -23,7 +23,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_dedup_map_keys"),
       GraftExtensions.dedupMapKeysInfo,
       GraftExtensions.dedupMapKeysBuilder))
-    ext.injectOptimizerRule(_ => graft.plans.CollapseRedundantRound)
   }
 }
 

@@ -38,7 +38,12 @@ object TopKTermsTypes {
   * supplementary character sorts below U+E000..U+FFFF in code units but
   * above them in code points / UTF-8 bytes), so [[codePointCompare]]
   * walks code points explicitly; ProfileTopKParitySpec fuzzes it against
-  * Spark's own sort on astral-plane terms.
+  * Spark's own sort on astral-plane terms. The equivalence needs terms
+  * that are valid Unicode, with no unpaired surrogates: UTF8String
+  * encodes a lone surrogate as '?' (0x3F), while codePointAt compares its
+  * raw 0xD800+ value, so the two orders diverge on such a term. Every
+  * consumer's terms are split from parquet-sourced UTF-8 text, which
+  * cannot hold a lone surrogate.
   *
   * PRECONDITIONS (as TopKNeighbors): `In.t` non-null (every consumer
   * feeds split/concat output, whose elements are never null — a null

@@ -272,6 +272,125 @@ object Dedup {
       .filter(col("df") <= bound).drop("df")
   }
 
+  /** [[tokenPairs]]' unguarded postings: one (doc_id, lang, source, tok)
+    * row per distinct token of each document.
+    *
+    * explode_OUTER + null-filter, not explode (round 22):
+    * InferFiltersFromGenerate copies a plain explode's generator child
+    * into `size(…)>0 AND isnotnull(…)` conjuncts below the Generate, and
+    * those land in an INTERPRETED Filter (the HOF child defeats codegen)
+    * that re-evaluates array_distinct(split(text)) twice per document on
+    * top of the Generate's own evaluation. The rule does not fire for
+    * outer generates (they preserve rows), and the post-Generate
+    * `tok IS NOT NULL` filter restores exactly explode's row set: split
+    * never produces null ELEMENTS (a null text yields a null ARRAY →
+    * one all-null outer row → dropped; an empty/short text yields [""]
+    * — a real, kept token, as before). Same rewrite measured on the
+    * ngram postings subtree: 0.75-0.80 → 0.43 s solo at sf0.1. Under
+    * Spark 4.1 the rule infers nothing at this site even for a plain
+    * explode, whose input here is an expression rather than an attribute
+    * (both forms plan alike); PlanSpec pins the shape in case that changes.
+    */
+  private[graft] def tokenPostings(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("lang"), col("source"),
+      explode_outer(array_distinct(split(col("text"), " "))).as("tok"))
+      .filter(col("tok").isNotNull)
+
+  /** dedup_ngram_jaccard's unguarded postings: one (doc_id, lang,
+    * source, h) row per distinct xxhash64'd word-trigram shingle of
+    * each document with at least three tokens. PlanSpec ratchets the
+    * plan shape (one shingle build, no Filter below the Generate).
+    */
+  private[graft] def shinglePostings(docs: DataFrame): DataFrame = {
+    // Split ONCE into a named column (round 22, VERDICT r21 #6 — the
+    // split-once technique that won in text_langid_chargram, and the
+    // sim_quantize_int8 named-column precedent): the old body built
+    // the shingles from the raw `split(text)` EXPRESSION, which the
+    // interpreted zip_with/slice lambdas re-evaluated per reference
+    // (~5 splits of the full text per row: the filter, the clamped
+    // length, and the three slices). CollapseProject keeps a
+    // non-cheap alias that is consumed more than once, so `toks` is
+    // now computed once per row and the slices read the array.
+    // Measured (commit 328d196, solo): warm 1.63-1.64 → 1.50-1.55 s; pair
+    // output exceptAll-identical both ways. The oracle is unchanged
+    // — same shingles, same guard, same arithmetic.
+    val toks = col("toks")
+    // greatest(…, 0): the size>=3 filter below does NOT protect this
+    // expression — InferFiltersFromGenerate copies the whole shingle
+    // expression into inferred `size(sh)>0` / `isnotnull(sh)` filter
+    // conjuncts, and codegen's common-subexpression elimination then
+    // evaluates it BEFORE the short-circuiting size check, so a 1-token
+    // doc fed slice() a length of −1 and killed the job (round-8
+    // DegenerateSweepSpec finding). A clamped length makes the
+    // expression total: short docs yield empty shingle arrays and the
+    // filter still drops them.
+    val nsh = greatest(size(toks) - 2, lit(0))
+    val doc = docs
+      .select(col("doc_id"), col("lang"), col("source"),
+        split(col("text"), " ").as("toks"))
+      .filter(size(toks) >= 3)
+      .select(col("doc_id"), col("lang"), col("source"),
+        array_distinct(transform(
+          zip_with(
+            slice(toks, lit(1), nsh),
+            zip_with(slice(toks, lit(2), nsh), slice(toks, lit(3), nsh),
+              (b, c) => concat(b, lit(" "), c)),
+            (a, bc) => concat(a, lit(" "), bc)),
+          sgl => xxhash64(sgl))).as("sh"))
+    // explode_OUTER + null-filter (round 22, same reasoning as
+    // [[tokenPostings]]): the plain explode's inferred-filter conjuncts
+    // copied the WHOLE shingle build into an interpreted Filter —
+    // 14 of the row's 15 split() evaluations lived there
+    // (plans/r22/dedup_ngram_shingles_{after,outer}.txt: split
+    // occurrences 14 → 2). h = xxhash64(…) is never null, so the
+    // isnotnull filter restores exactly explode's row set. Postings
+    // subtree solo at sf0.1: 0.75-0.80 → 0.43 s (commit 328d196).
+    doc.select(col("doc_id"), col("lang"), col("source"),
+      explode_outer(col("sh")).as("h"))
+      .filter(col("h").isNotNull)
+  }
+
+  /** dedup_embedding's best-prior ordering as one decimal: the best prior
+    * is `max_by(…, packedSimOrder(sim, prior_id))` per query vector.
+    *
+    * Why one packed decimal (round 22, VERDICT r21 #3): the r21
+    * TopKNeighbors K=1 typed aggregate had O(1) buffers but ran in
+    * ObjectHashAggregateExec, which FALLS BACK to sort-based
+    * aggregation past 128 distinct keys per task
+    * (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) —
+    * and this query's ~200 broadcast queries cross it: commit 328d196 read
+    * numTasksFallBacked=2 (partial) / 1 (final) from the executed
+    * plan's metrics at sf0.1, i.e. every task SORTED the whole
+    * 200×candidates join output by group key. The conf is
+    * session-global and order-dependent (raising it risks OOM on the
+    * grow-with-rows percentile buffers it protects), so instead the
+    * argmax becomes fixed-width: the window ordering
+    * (sim DESC NULLS LAST, prior_id ASC) is packed into one mutable
+    * DECIMAL —
+    *   packed = s4 · 10²⁰ − prior_id,
+    *   s4     = round(sim·10⁴) ∈ [−10⁴, 10⁴], or −2·10⁴ for NULL sim
+    * — exact (sim is 4dp via Exact.roundN, so double→decimal(6,4)
+    * recovers it exactly; |prior_id| < 10¹⁹ < 10²⁰/2 keeps the two
+    * fields non-overlapping), strictly monotonic in the window
+    * order, and collision-free (prior_id is unique per group). The
+    * two max_by(…, packed) aggregates are DeclarativeAggregates on
+    * all-mutable buffers, so the plan is a codegen'd
+    * HashAggregateExec — NO fallback threshold at ANY group count,
+    * no per-row typed-encoder work, and max_by(sim, packed) returns
+    * NULL for a NULL-sim winner, the old ns-flag contract. Parity:
+    * EmbeddingArgmaxSpec fuzzes this expression against the r20
+    * window on adversarial tie/NULL fixtures;
+    * oracle unchanged (Verify 201/201). prior_id is non-null by
+    * construction: a NULL vec_id fails the `prior_id < vec_id` join
+    * predicate.
+    */
+  private[graft] def packedSimOrder(sim: Column, priorId: Column): Column = {
+    val s4 = when(sim.isNull, lit(-20000L))
+      .otherwise((sim.cast("decimal(6,4)") * lit(10000)).cast("long"))
+    s4.cast("decimal(7,0)") * lit(new java.math.BigDecimal("100000000000000000000")) -
+      priorId.cast("decimal(20,0)")
+  }
+
   /** Token-set overlap pair generation over (lang, source) blocks in the
     * df-guarded inverted-index formulation — shared by
     * dedup_jaccard_pairs / dedup_containment_pairs / dedup_components and
@@ -300,23 +419,7 @@ object Dedup {
     * 1.8→1.3 s.
     */
   def tokenPairs(docs: DataFrame, bound: Long = DfBound): DataFrame = {
-    // explode_OUTER + null-filter, not explode (round 22):
-    // InferFiltersFromGenerate copies a plain explode's generator child
-    // into `size(…)>0 AND isnotnull(…)` conjuncts below the Generate, and
-    // those land in an INTERPRETED Filter (the HOF child defeats codegen)
-    // that re-evaluates array_distinct(split(text)) twice per document on
-    // top of the Generate's own evaluation. The rule does not fire for
-    // outer generates (they preserve rows), and the post-Generate
-    // `tok IS NOT NULL` filter restores exactly explode's row set: split
-    // never produces null ELEMENTS (a null text yields a null ARRAY →
-    // one all-null outer row → dropped; an empty/short text yields [""]
-    // — a real, kept token, as before). Same rewrite measured on the
-    // ngram postings subtree: 0.75-0.80 → 0.43 s solo at sf0.1.
-    val dt = materialize(dfGuard(
-      docs.select(col("doc_id"), col("lang"), col("source"),
-        explode_outer(array_distinct(split(col("text"), " "))).as("tok"))
-        .filter(col("tok").isNotNull),
-      Seq("lang", "source", "tok"), bound))
+    val dt = materialize(dfGuard(tokenPostings(docs), Seq("lang", "source", "tok"), bound))
     val sz = dt.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     dt.alias("a")
       .join(dt.alias("b"),
@@ -440,7 +543,7 @@ object Dedup {
       // Fresh-label doubling contracts slightly faster per round (it
       // jumps through the just-propagated pointer), but each round paid
       // a second DISK_ONLY localCheckpoint write + its job barrier.
-      // Measured on the real sf0.1 edge set (R22Probe): round count
+      // Measured on the real sf0.1 edge set (commit 328d196): round count
       // UNCHANGED (3 fused vs 3 incumbent — near-dup clusters are dense,
       // the jump rarely fires), wall 2.53-2.67 → 2.15-2.27 s solo, label
       // sets identical. Worst-case topology: simulation puts old-label
@@ -713,58 +816,12 @@ object Dedup {
     QueryDef(
       "dedup_ngram_jaccard",
       (s, d) => {
-        // Split ONCE into a named column (round 22, VERDICT r21 #6 — the
-        // split-once technique that won in text_langid_chargram, and the
-        // sim_quantize_int8 named-column precedent): the old body built
-        // the shingles from the raw `split(text)` EXPRESSION, which the
-        // interpreted zip_with/slice lambdas re-evaluated per reference
-        // (~5 splits of the full text per row: the filter, the clamped
-        // length, and the three slices). CollapseProject keeps a
-        // non-cheap alias that is consumed more than once, so `toks` is
-        // now computed once per row and the slices read the array.
-        // Measured (R22Probe, solo): warm 1.63-1.64 → 1.50-1.55 s; pair
-        // output exceptAll-identical both ways. The oracle is unchanged
-        // — same shingles, same guard, same arithmetic.
-        val toks = col("toks")
-        // greatest(…, 0): the size>=3 filter below does NOT protect this
-        // expression — InferFiltersFromGenerate copies the whole shingle
-        // expression into inferred `size(sh)>0` / `isnotnull(sh)` filter
-        // conjuncts, and codegen's common-subexpression elimination then
-        // evaluates it BEFORE the short-circuiting size check, so a 1-token
-        // doc fed slice() a length of −1 and killed the job (round-8
-        // DegenerateSweepSpec finding). A clamped length makes the
-        // expression total: short docs yield empty shingle arrays and the
-        // filter still drops them.
-        val nsh = greatest(size(toks) - 2, lit(0))
-        val doc = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("source"),
-            split(col("text"), " ").as("toks"))
-          .filter(size(toks) >= 3)
-          .select(col("doc_id"), col("lang"), col("source"),
-            array_distinct(transform(
-              zip_with(
-                slice(toks, lit(1), nsh),
-                zip_with(slice(toks, lit(2), nsh), slice(toks, lit(3), nsh),
-                  (b, c) => concat(b, lit(" "), c)),
-                (a, bc) => concat(a, lit(" "), bc)),
-              sgl => xxhash64(sgl))).as("sh"))
         // df guard + POST-GUARD sizes (same semantics as tokenPairs: the
         // Jaccard denominator counts surviving shingles only; the oracle's
         // sz CTE reads the guarded sh the same way). Materialized for the
         // same reason as tokenPairs: three consumers (a, b, sizes), no
         // cross-subtree CSE — one postings shuffle instead of three.
-        // explode_OUTER + null-filter (round 22, same reasoning as
-        // [[tokenPairs]]): the plain explode's inferred-filter conjuncts
-        // copied the WHOLE shingle build into an interpreted Filter —
-        // 14 of the row's 15 split() evaluations lived there
-        // (plans/r22/dedup_ngram_shingles_{after,outer}.txt: split
-        // occurrences 14 → 2). h = xxhash64(…) is never null, so the
-        // isnotnull filter restores exactly explode's row set. Postings
-        // subtree solo at sf0.1: 0.75-0.80 → 0.43 s (R22Probe ngramplan).
-        val ex = materialize(dfGuard(
-          doc.select(col("doc_id"), col("lang"), col("source"),
-            explode_outer(col("sh")).as("h"))
-            .filter(col("h").isNotNull),
+        val ex = materialize(dfGuard(shinglePostings(Tables.documents(s, d)),
           Seq("lang", "source", "h"), DfBound))
         val sizes = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         val a = ex.select(col("doc_id").as("doc_id_a"), col("lang"), col("source"), col("h"))
@@ -822,45 +879,10 @@ object Dedup {
         val q = broadcast(e.filter(col("vec_id") < 200)
           .select(col("vec_id"), col("v").as("qv")))
         val c = e.select(col("vec_id").as("prior_id"), col("v").as("cv"))
-        // Best-prior pick via two built-in max_by aggregates over ONE
-        // packed decimal ordering (round 22, VERDICT r21 #3). The r21
-        // TopKNeighbors K=1 typed aggregate had O(1) buffers but ran in
-        // ObjectHashAggregateExec, which FALLS BACK to sort-based
-        // aggregation past 128 distinct keys per task
-        // (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) —
-        // and this query's ~200 broadcast queries cross it: R22Probe read
-        // numTasksFallBacked=2 (partial) / 1 (final) from the executed
-        // plan's metrics at sf0.1, i.e. every task SORTED the whole
-        // 200×candidates join output by group key. The conf is
-        // session-global and order-dependent (raising it risks OOM on the
-        // grow-with-rows percentile buffers it protects), so instead the
-        // argmax becomes fixed-width: the window ordering
-        // (sim DESC NULLS LAST, prior_id ASC) is packed into one mutable
-        // DECIMAL —
-        //   packed = s4 · 10²⁰ − prior_id,
-        //   s4     = round(sim·10⁴) ∈ [−10⁴, 10⁴], or −2·10⁴ for NULL sim
-        // — exact (sim is 4dp via Exact.roundN, so double→decimal(6,4)
-        // recovers it exactly; |prior_id| < 10¹⁹ < 10²⁰/2 keeps the two
-        // fields non-overlapping), strictly monotonic in the window
-        // order, and collision-free (prior_id is unique per group). The
-        // two max_by(…, packed) aggregates are DeclarativeAggregates on
-        // all-mutable buffers, so the plan is a codegen'd
-        // HashAggregateExec — NO fallback threshold at ANY group count,
-        // no per-row typed-encoder work, and max_by(sim, packed) returns
-        // NULL for a NULL-sim winner, the old ns-flag contract. Parity:
-        // EmbeddingArgmaxSpec fuzzes the packed pick against the r21
-        // aggregate and the r20 window on adversarial tie/NULL fixtures;
-        // oracle unchanged (Verify 201/201). prior_id is non-null by
-        // construction: a NULL vec_id fails the `prior_id < vec_id` join
-        // predicate.
-        val s4 = when(col("sim").isNull, lit(-20000L))
-          .otherwise((col("sim").cast("decimal(6,4)") * lit(10000)).cast("long"))
-        val packed = (s4.cast("decimal(7,0)") *
-          lit(new java.math.BigDecimal("100000000000000000000")) -
-          col("prior_id").cast("decimal(20,0)")).as("packed")
+        // Best-prior pick: two max_by aggregates over [[packedSimOrder]].
         q.join(c, col("prior_id") < col("vec_id"))
           .withColumn("sim", Exact.roundN(Similarity.cosine(col("qv"), col("cv")), 4))
-          .withColumn("packed", packed)
+          .withColumn("packed", packedSimOrder(col("sim"), col("prior_id")))
           .groupBy(col("vec_id"))
           .agg(max_by(col("prior_id"), col("packed")).as("best_prior_id"),
             max_by(col("sim"), col("packed")).as("sim"))

@@ -467,7 +467,7 @@ object TextOps {
         // to find the codepoint offset — O(len) per call, O(len²) per
         // document. Splitting once into a codepoint array and zipping
         // three slices is O(len): measured 4.3-6.0 s → 1.9-2.3 s for the
-        // corpus-wide gram aggregation at sf0.1 (R21Probe), gram-for-gram
+        // corpus-wide gram aggregation at sf0.1 (commit 45b312e), gram-for-gram
         // identical including non-BMP emoji (split("") keeps surrogate
         // pairs whole — probed on the unicode degenerate texts; a
         // per-element split form was also tried and is the known

@@ -12,7 +12,7 @@ import java.nio.file.Files
   *
   * No output values are asserted here — value-level parity on the same
   * three sets is the round-9 oracle sweep (tools/degen_preflight.sh →
-  * DEGENERATE_PREFLIGHT_r09.log); this suite pins only "no input shaped
+  * DEGENERATE_PREFLIGHT_r{N}.log); this suite pins only "no input shaped
   * like this kills the job", cheaply, on every `sbt test`.
   */
 class DegenerateSweepSpec extends SparkSpec {

@@ -18,18 +18,12 @@ import org.apache.spark.sql.functions._
   */
 class EmbeddingArgmaxSpec extends SparkSpec {
 
-  /** The registered query's packed reduction, restated at the seam. */
-  private def packedPick(rows: DataFrame): DataFrame = {
-    val s4 = when(col("sim").isNull, lit(-20000L))
-      .otherwise((col("sim").cast("decimal(6,4)") * lit(10000)).cast("long"))
-    val packed = s4.cast("decimal(7,0)") *
-      lit(new java.math.BigDecimal("100000000000000000000")) -
-      col("prior_id").cast("decimal(20,0)")
-    rows.withColumn("packed", packed)
+  /** The registered query's packed reduction over the production packing. */
+  private def packedPick(rows: DataFrame): DataFrame =
+    rows.withColumn("packed", graft.llm.Dedup.packedSimOrder(col("sim"), col("prior_id")))
       .groupBy(col("vec_id"))
       .agg(max_by(col("prior_id"), col("packed")).as("best_prior_id"),
         max_by(col("sim"), col("packed")).as("sim"))
-  }
 
   /** The r20 window reference: rn=1 under (sim DESC NULLS LAST, prior ASC). */
   private def windowPick(rows: DataFrame): DataFrame = {

@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes `.explain("formatted")` output for the named queries to
-  * plans/<round>/<query>_<tag>.txt — the optimization-round evidence
-  * artifact (the judge checks plan claims against these files).
+  * <roundDir>/<query>_<tag>.txt — the optimization-round evidence
+  * artifact (the judge checks plan claims against these files). roundDir
+  * defaults to the uncommitted `target/plans`; pass `plans/r<N>` to
+  * archive a round's dumps.
   *
   * Usage: runMain graft.ExplainDump <tag> <q1,q2,...> [sfDir] [roundDir]
   */
@@ -19,7 +21,7 @@ object ExplainDump {
     spark.sparkContext.setLogLevel("ERROR")
     val tag = args(0)
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val out = Paths.get(args.lift(3).getOrElse("plans/r21"))
+    val out = Paths.get(args.lift(3).getOrElse("target/plans"))
     Files.createDirectories(out)
     args(1).split(",").map(_.trim).filter(_.nonEmpty).foreach { op =>
       val df = SparkEntry.queries(op)(spark, dir)

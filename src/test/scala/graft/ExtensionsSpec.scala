@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 /** The SparkSessionExtensions entry point must make the native expressions
   * usable from plain SQL in a session built with the extension installed.
@@ -30,37 +29,6 @@ class ExtensionsSpec extends SparkSpec {
           |                    CAST(array(0.0, 1.0) AS ARRAY<DOUBLE>)) AS c""".stripMargin)
         .head().getDouble(0)
       assert(math.abs(r2) < 1e-12)
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
-  }
-
-  test("CollapseRedundantRound folds round(round(x, n), n) in the optimized plan") {
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      val ext = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.functions.GraftExtensions)
-        .getOrCreate()
-      // range (not a LocalRelation) so ConvertToLocalRelation can't
-      // pre-evaluate the projection and erase the Rounds under test
-      val df = ext.range(1, 100)
-        .selectExpr("CAST(id AS DOUBLE) / 7 AS x")
-        .selectExpr("round(round(x, 2), 2) AS r", "round(x, 2) AS expected")
-      val rounds = df.queryExecution.optimizedPlan.expressions
-        .flatMap(_.collect { case r: org.apache.spark.sql.catalyst.expressions.Round => r })
-      assert(rounds.size === 2, s"nested round not collapsed: $rounds")
-      assert(df.filter(col("r") =!= col("expected")).count() === 0)
-      // different scales must NOT collapse
-      val keep = ext.range(1, 10)
-        .selectExpr("round(round(CAST(id AS DOUBLE) / 7, 4), 2) AS r")
-      val kept = keep.queryExecution.optimizedPlan.expressions
-        .flatMap(_.collect { case r: org.apache.spark.sql.catalyst.expressions.Round => r })
-      assert(kept.size === 2, "distinct-scale rounds were wrongly collapsed")
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)

@@ -5,11 +5,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 
 /** Diagnostic main (assertion-free, PlanDump-style): prints, for every
   * registry query, the set of parquet TABLES its analyzed plan reads.
-  * Used to route ops to the right scaling-harness family (documents →
-  * LlmScalingBench, events → EventsScalingBench, embeddings →
-  * EmbeddingsScalingBench, TPC-H tables → RelationalScalingBench and its
-  * extra-replication arms) when extending measured-growth coverage
-  * (VERDICT r16 #6). Plan-derived, not grep-derived: a query's footprint
+  * Used to route ops to the right [[ScalingBench]] family (documents →
+  * llm, events → events, embeddings → embeddings, TPC-H tables →
+  * relational and its extra-replication arms) when extending
+  * measured-growth coverage (VERDICT r16 #6). Plan-derived, not grep-derived: a query's footprint
   * is whatever its analyzed plan actually scans.
   *
   * Run: `sbt -batch "Test/runMain graft.OpTablesDump [sfDir] [op,op,…]"`.

@@ -265,7 +265,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("profile top-k queries reduce map-side (no vocabulary-wide window)") {
-    // Round-16 scaling-harness finding (LlmScalingBench, BASELINE.md r16):
+    // Round-16 scaling-harness finding (ScalingBench llm, BASELINE.md r16):
     // the profile top-N window — row_number over Window.partitionBy(lang)
     // on corpus-wide (lang, gram|term) counts — funnels the entire
     // vocabulary into ≤#languages sort tasks (×8→×64 corpus: 35.7× wall
@@ -300,7 +300,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dedup_embedding keeps the cosine out of the join and pre-limits the window") {
-    // Round-16 scaling-harness finding (EmbeddingsScalingBench, BASELINE.md
+    // Round-16 scaling-harness finding (ScalingBench embeddings, BASELINE.md
     // r16): dedup_embedding stayed flat through ×256 (512k vectors). The
     // plan properties that make that true — and that this ratchet pins:
     // (1) the 200-query side is the BNL build side with its vec_id < 200
@@ -337,6 +337,39 @@ class PlanSpec extends SparkSpec {
       s"dedup_embedding: the per-query sort window shape is back:\n$p")
     assert(!p.contains("SortAggregate"),
       s"dedup_embedding: the top-1 aggregate fell back to SortAggregate:\n$p")
+  }
+
+  test("dedup postings evaluate their split / shingle build once, never in a Filter below the Generate") {
+    // InferFiltersFromGenerate copies a plain explode's generator input
+    // into `size(…)>0 AND isnotnull(…)` conjuncts below the Generate, where
+    // an interpreted Filter re-evaluates the split / shingle build per row.
+    // The three dedup explode sites use explode_outer + a post-Generate
+    // null filter so the rule never fires (commit 328d196). Under Spark
+    // 4.1 a plain explode at the tokenPostings site infers nothing either
+    // (its input is an expression, not an attribute); the shingle and
+    // minhash sites explode an attribute and go red with a plain explode.
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Expression, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan}
+    val isSplit: Expression => Boolean = _.isInstanceOf[StringSplit]
+    val isShingles: Expression => Boolean = _.isInstanceOf[ArrayTransform]
+    def builds(plan: LogicalPlan, is: Expression => Boolean): Int =
+      plan.collect { case n => n.expressions.map(_.collect { case e if is(e) => e }.size).sum }.sum
+    val docs = Tables.documents(spark, sf0001)
+    val sites = Seq(
+      ("tokenPostings", graft.llm.Dedup.tokenPostings(docs), isSplit),
+      ("shinglePostings", graft.llm.Dedup.shinglePostings(docs), isShingles),
+      ("dedup_minhash_verified", Registry.queries("dedup_minhash_verified")(spark, sf0001), isSplit))
+    for ((site, df, is) <- sites) {
+      val plan = df.queryExecution.optimizedPlan
+      val generates = plan.collect { case g: Generate => g }
+      assert(generates.nonEmpty, s"$site: no Generate in\n$plan")
+      for (g <- generates) {
+        val filtered = g.child.collect { case f: Filter if f.condition.find(is).isDefined => f }
+        assert(filtered.isEmpty,
+          s"$site: a Filter below the Generate evaluates the build again:\n$plan")
+        assert(builds(g, is) === 1, s"$site: expected one build under the Generate:\n$plan")
+      }
+    }
   }
 
   test("agg_trimmed_mean finds its trim cuts without a raw-row rank window") {

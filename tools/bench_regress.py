@@ -13,7 +13,7 @@ Usage:
 OLD / NEW are either BENCH_DETAILS.json-shaped files (seq_queries at the
 top level) or BENCH_SEQ_r{N}.json archives — for archives, the LAST run
 in the file is used unless a run name is appended with ':', e.g.
-  tools/bench_regress.py BENCH_SEQ_r10.json:r10_run3_head BENCH_DETAILS.json
+  tools/bench_regress.py BENCH_SEQ_r22.json:r22_entry_run1 BENCH_DETAILS.json
 Exit 1 if any query is flagged, 0 otherwise.
 """
 import json
